@@ -413,11 +413,27 @@ def dedup_losers(
             .select(id_col)
         )
     if method == "minhash":
+        from pyspark.sql import Window
+
         pairs = minhash_near_dups(df, text_col, id_col, threshold=threshold, bands=bands)
-        return (
-            resolve_clusters(pairs)
-            .filter(F.col("doc_id") != F.col("canonical_id"))
-            .select(F.col("doc_id").alias(id_col))
+        # resolve_clusters certifies convergence with a label SUM, so its
+        # labels must be numeric: rank the candidate ids (near-dup-sized,
+        # never the corpus) in id order.  The min rank is the min id, so the
+        # keep-smallest-id rule holds for string ids such as urls too.
+        ranks = (
+            pairs.select(F.col("id_a").alias("_id"))
+            .union(pairs.select(F.col("id_b").alias("_id")))
+            .distinct()
+            .withColumn("_r", F.row_number().over(Window.orderBy("_id")))
+        )
+        rp = (
+            pairs.join(ranks.toDF("id_a", "_ra"), "id_a")
+            .join(ranks.toDF("id_b", "_rb"), "id_b")
+            .select(F.col("_ra").alias("id_a"), F.col("_rb").alias("id_b"))
+        )
+        losers = resolve_clusters(rp).filter(F.col("doc_id") != F.col("canonical_id"))
+        return losers.join(ranks, losers["doc_id"] == ranks["_r"]).select(
+            F.col("_id").alias(id_col)
         )
     raise ValueError(f"unknown dedup method {method!r} (want 'exact' or 'minhash')")
 

@@ -636,12 +636,12 @@ def robots_filter(
     join (co-partitioned, rule fanout bounded per host) and the url-keyed
     verdict aggregate, both carrying (url, small-int) payloads, never
     html.  A mega-host's pages spread over the url aggregate's hash
-    partitioning — per-url groups are rule-count-sized."""
-    from .skew import spread_scan
-
+    partitioning — per-url groups are rule-count-sized.  The input is not
+    spread first: a round-robin would move full page rows, and its
+    partition-count probe runs the input's shuffles ahead of the query."""
     path0 = F.regexp_extract(F.col(url_col), r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+(/[^?#]*)?", 1)
     path = F.when(path0 == "", F.lit("/")).otherwise(path0)
-    keyed = spread_scan(pages).withColumn(
+    keyed = pages.withColumn(
         "_host", F.nullif(host_of(F.col(url_col)), F.lit(""))
     )
     ruled_hosts = rules.select(F.col("host").alias("_host")).distinct()

@@ -1,4 +1,5 @@
-"""End-to-end extraction job: scan -> salt -> extract -> write -> lineage.
+"""End-to-end extraction job: scan -> salt -> funnel -> extract -> write ->
+lineage.
 
 Scale design (SURVEY.md §4; graded against the 100 TB target):
 
@@ -14,6 +15,9 @@ Scale design (SURVEY.md §4; graded against the 100 TB target):
   the write uses dynamic partition overwrite so re-processing a partition is
   idempotent (the reference's DynamoDB state machine + idempotent S3 keys,
   tracking_service.py:22-82, storage_service.py:68).
+* **One-pass funnel.** The admission and dedup tiers run as ONE query over
+  a slim keyed frame (url, part_id, fp) that carries no html/text payload,
+  and their losers leave the scan through one broadcast anti-join.
 * **Quarantine.** Rows that fail extraction carry an `error` column instead
   of throwing (the DLQ analog, template.yaml:88-107).
 """
@@ -22,6 +26,7 @@ from __future__ import annotations
 
 import os
 import time
+import warnings
 from datetime import datetime, timezone
 from typing import Optional
 
@@ -34,7 +39,7 @@ def _mark(label: str, t0: float) -> float:
         print(f"[job-timing] {label}: {now - t0:.2f}s", flush=True)
     return now
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .schema import LINEAGE_SCHEMA, METRICS_SCHEMA
@@ -56,9 +61,8 @@ def _tune_split_size(
     small-corpus bench collapses to 1 task and cannot scale; at 100 TB the
     computed value caps back at the 128 MB default, so this is a no-op on a
     real cluster (where file count >> cores) and only matters at bench scale.
-    Local paths only; silently keeps defaults elsewhere."""
-    import os
-
+    Local paths only: a non-local path keeps Spark's defaults, and a local
+    one that cannot be sized keeps them with a warning."""
     try:
         total = 0
         if os.path.isdir(pages_path):
@@ -68,13 +72,14 @@ def _tune_split_size(
             total = os.path.getsize(pages_path)
         else:
             return
-        cores = target_parallelism or spark.sparkContext.defaultParallelism
-        # ~3 waves of tasks per core for balance.  target_parallelism lets a
-        # scaling comparison pin IDENTICAL splits at every cluster size.
-        split = max(_MIN_SPLIT, min(_MAX_SPLIT, total // max(1, cores * 3)))
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-    except Exception:
-        pass
+    except OSError as e:
+        warnings.warn(f"split sizing skipped, Spark defaults kept: {e!r}", RuntimeWarning)
+        return
+    cores = target_parallelism or spark.sparkContext.defaultParallelism
+    # ~3 waves of tasks per core for balance.  target_parallelism lets a
+    # scaling comparison pin IDENTICAL splits at every cluster size.
+    split = max(_MIN_SPLIT, min(_MAX_SPLIT, total // max(1, cores * 3)))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
 
 
 def _row_groups_below(pages_path: str, cores: int) -> bool:
@@ -83,33 +88,34 @@ def _row_groups_below(pages_path: str, cores: int) -> bool:
     split size (parquet is unsplittable below row-group granularity).
     Only reads footers when the file COUNT is already below `cores` (a
     many-file input is parallel enough without any probe), so at scale
-    this never touches a footer.  Non-local / unreadable paths: False."""
-    import os
+    this never touches a footer.  Non-local paths: False; unreadable ones:
+    False with a warning."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
+    if os.path.isdir(pages_path):
+        files = [
+            os.path.join(root, f)
+            for root, _dirs, fs in os.walk(pages_path)
+            for f in fs
+            if f.endswith(".parquet")
+        ]
+    elif os.path.isfile(pages_path):
+        files = [pages_path]
+    else:
+        return False
+    if len(files) >= cores:
+        return False
+    groups = 0
     try:
-        if os.path.isdir(pages_path):
-            files = [
-                os.path.join(root, f)
-                for root, _dirs, fs in os.walk(pages_path)
-                for f in fs
-                if f.endswith(".parquet")
-            ]
-        elif os.path.isfile(pages_path):
-            files = [pages_path]
-        else:
-            return False
-        if len(files) >= cores:
-            return False
-        import pyarrow.parquet as pq
-
-        groups = 0
         for f in files:
             groups += pq.ParquetFile(f).metadata.num_row_groups
             if groups >= cores:
                 return False
-        return True
-    except Exception:
+    except (OSError, pa.ArrowInvalid) as e:
+        warnings.warn(f"row-group probe skipped: {e!r}", RuntimeWarning)
         return False
+    return True
 
 
 def with_part_id(pages: DataFrame, num_parts: int = DEFAULT_NUM_PARTS) -> DataFrame:
@@ -144,6 +150,35 @@ def completed_parts(spark: SparkSession, lineage_path: str) -> list[int]:
     return [r.part_id for r in latest.collect()]
 
 
+# drop counters in summary/metrics order; the funnel's tier ORDER (which
+# fires first) is the order of the tier blocks in run_extraction_job
+_DROP_COUNTERS = ("dups", "store_dups", "url_dups", "blocked", "robots")
+
+
+def _drop_where(frame: DataFrame, tier: str, fires: Column) -> DataFrame:
+    """Name `tier` as the drop of each row it fires on that no earlier tier
+    dropped (first fire wins)."""
+    alive = F.col("_drop").isNull()
+    return frame.withColumn(
+        "_drop", F.when(alive & fires, F.lit(tier)).otherwise(F.col("_drop"))
+    )
+
+
+def _flag(frame: DataFrame, tier: str, hits: DataFrame) -> DataFrame:
+    """Per-row tier: its (small) hit-url set joins in as a flag."""
+    flag = F.broadcast(hits.select("url").distinct().withColumn("_hit", F.lit(True)))
+    joined = frame.join(flag, "url", "left")
+    return _drop_where(joined, tier, F.col("_hit").isNotNull()).drop("_hit")
+
+
+def _keep_min(frame: DataFrame, tier: str, key: Column, member: Column) -> DataFrame:
+    """Keep-one tier: among the `member` rows no earlier tier dropped, the
+    min url of each `key` group is kept and the others fire."""
+    cand = F.col("_drop").isNull() & member
+    keep = F.min(F.when(cand, F.col("url"))).over(Window.partitionBy(key))
+    return _drop_where(frame, tier, cand & (F.col("url") != keep))
+
+
 def run_extraction_job(
     spark: SparkSession,
     pages_path: str,
@@ -173,48 +208,43 @@ def run_extraction_job(
     `only_parts` restricts the run to a subset of partitions (used by the
     kill-and-resume test to simulate a mid-job failure).
 
-    `dedup` ("exact" | "minhash" | None) inserts a pre-extract dedup stage:
-    at 100 TB you dedup BEFORE paying Python extraction — every duplicate
-    page dropped here skips the whole Arrow stage.  The (small) loser set is
-    computed once (eager localCheckpoint, so the LSH DAG doesn't re-run
-    inside the extraction scan), anti-joined out of the input, and the
-    per-partition dropped counts land in lineage as `dups_dropped`.
+    Pre-extract funnel: at 100 TB you drop pages BEFORE paying Python
+    extraction.  The enabled tiers run in this order, and the FIRST tier
+    that fires on a page names its drop, so every dropped page is audited
+    exactly once (a keep-one tier picks its winner only among the pages no
+    earlier tier dropped):
 
-    `fp_store_path` enables CROSS-RUN dedup (the re-crawl scenario): pages
-    whose canonical fingerprint is already in the persisted store — i.e.
-    processed by a COMPLETED earlier run — are dropped before extraction,
-    and the survivors' fingerprints are appended to the store when this
-    run's partitions complete.  The store side is pruned to its fp column
-    for the probe; at 100 TB keep it bucketed by fp (sources.bucketing).
-    `fp_store_bloom` adds the Bloom admission tier in front of the store
-    join (operators.dedup.bloom_build/bloom_hit): bloom-misses skip the
-    join entirely, only the hit slice (true dups + the designed FP rate of
-    `fp_store_bloom_bits`) pays the exact semi-join — output and lineage
-    provably identical either way.
+    1. `blocklist` (DataFrame with a `domain` column) refuses ADMISSION to
+       pages whose url host — or any parent domain of it — is listed
+       (UT1-style suffix semantics, operators.webgraph).
+    2. `robots_rules` (a parse_robots output (host, allow, prefix)) applies
+       the REP verdict per url.
+    3. `url_dedup` collapses tracking-param/fragment/case variants of one
+       canonical URL to the min-url page, without reading any text.
+    4. `dedup` ("exact" | "minhash") drops duplicate texts, keeping the
+       min url of each cluster.  Empty/whitespace texts never dedup: they
+       share one fingerprint but each keeps its own provenance.
+    5. `fp_store_path` enables CROSS-RUN dedup (the re-crawl scenario):
+       pages whose fingerprint is already in the persisted store — i.e.
+       processed by a COMPLETED earlier run — are dropped, and the
+       survivors' fingerprints are appended to the store when this run's
+       partitions complete.  `fp_store_bloom` probes a Bloom filter of the
+       store first (operators.dedup.bloom_build/bloom_hit), so only the
+       bloom-hit slice (true dups + the designed FP rate of
+       `fp_store_bloom_bits`) pays the exact semi-join; output and lineage
+       are identical either way.
 
-    `url_dedup` inserts the CHEAPEST dedup tier ahead of everything else:
-    tracking-param/fragment/case variants of one canonical URL collapse to
-    the min-url page before any text is read or fingerprinted (one hash-
-    shuffle on a short canonical-url string — at 10^12 pages this tier
-    never touches the html/text columns).  Dropped counts land in lineage
-    as `url_dups_dropped`; the text-dedup / fp-store universes exclude url
-    losers so every dropped page is audited exactly once.
-
-    `robots_rules` (a parse_robots output (host, allow, prefix), or None)
-    applies the REP admission verdict per url as tier -0.5 — after the
-    blocklist (blocked pages never pay the robots join), before url
-    canonicalization.  Refusals get their own `robots_dropped` summary /
-    metrics counter; in lineage they fold into the admission column
-    (`blocked_dropped` audits all admission refusals) so each dropped
-    page lands in exactly one lineage bucket.
-
-    `blocklist` (DataFrame with a `domain` column, or None) refuses
-    ADMISSION to pages whose url host — or any parent domain of it — is
-    listed (UT1-style suffix semantics, operators.webgraph).  It runs as
-    tier -1, before even url canonicalization: a blocked page is never
-    read, fingerprinted, or counted as crawl work.  Refused counts land in
-    lineage as `blocked_dropped`.  The probe is two broadcast joins (the
-    blocklist, then the tiny hit set) — zero corpus Exchange.
+    The funnel is one pass: the corpus is read once into a slim keyed frame
+    (url, part_id, fp) with no html/text payload; each tier marks a single
+    `_drop` column (per-row tiers join their small hit sets in as flags,
+    keep-one tiers are windows); one eager checkpoint of the loser rows
+    gives the per-(tier, part) counts in one collect and the one broadcast
+    anti-join out of the input.  Losers are computed over the FULL corpus,
+    not this run's todo: on resume a duplicate pair can span a completed
+    part and a remaining one.  Summary and metrics count each tier
+    separately; lineage folds blocklist + robots into `blocked_dropped`,
+    url variants into `url_dups_dropped`, and text + store dups into
+    `dups_dropped`.
 
     `pii_scrub` redacts emails / phone numbers / cedula IDs from the
     extracted text AFTER extraction (pure regexp codegen on the narrow
@@ -247,149 +277,23 @@ def run_extraction_job(
     par = spark.sparkContext.defaultParallelism
     if _row_groups_below(pages_path, par):
         raw_pages = raw_pages.repartition(par)
-    pages = with_part_id(raw_pages, num_parts)
 
     done = set(completed_parts(spark, lineage_path))
-    todo = pages.filter(~F.col("part_id").isin(list(done))) if done else pages
-    if only_parts is not None:
-        todo = todo.filter(F.col("part_id").isin(only_parts))
 
+    def in_run(df: DataFrame) -> DataFrame:
+        """The rows of the parts THIS run owns."""
+        if done:
+            df = df.filter(~F.col("part_id").isin(list(done)))
+        if only_parts is not None:
+            df = df.filter(F.col("part_id").isin(only_parts))
+        return df
+
+    todo = in_run(with_part_id(raw_pages, num_parts))
     t0 = time.monotonic()
     tm = t0
 
-    def _per_part_counts(loser_urls: DataFrame) -> dict[int, int]:
-        """Per-partition loser counts restricted to THIS run's parts —
-        the shared lineage-audit pattern for every drop tier."""
-        here = with_part_id(loser_urls, num_parts)
-        if done:
-            here = here.filter(~F.col("part_id").isin(list(done)))
-        if only_parts is not None:
-            here = here.filter(F.col("part_id").isin(only_parts))
-        return {
-            r.part_id: r.n
-            for r in here.groupBy("part_id").agg(F.count("*").alias("n")).collect()
-        }
-
-    # --- tier -1: domain-blocklist admission filter (host string only) ---
-    blocked_by_part: dict[int, int] = {}
-    blocked_dropped = 0
-    dedup_universe = pages  # later tiers exclude earlier tiers' losers so
-    #                         each dropped page is audited exactly once
-    if blocklist is not None:
-        from ..operators.webgraph import domain_suffixes, host_of
-
-        bl_losers = (
-            pages.select(
-                "url",
-                F.explode(domain_suffixes(host_of(F.col("url")))).alias("_sfx"),
-            )
-            .join(
-                F.broadcast(blocklist.select(F.lower("domain").alias("_sfx"))),
-                "_sfx",
-                "left_semi",
-            )
-            .select("url")
-            .distinct()  # a host can hit via several suffixes; audit once
-            .localCheckpoint()  # eager: the probe DAG runs exactly once
-        )
-        blocked_by_part = _per_part_counts(bl_losers)
-        blocked_dropped = sum(blocked_by_part.values())
-        todo = todo.join(F.broadcast(bl_losers), "url", "left_anti")
-        dedup_universe = dedup_universe.join(F.broadcast(bl_losers), "url", "left_anti")
-        tm = _mark("blocklist", tm)
-
-    # --- tier -0.5: robots.txt admission (REP verdict per url) -----------
-    # `robots_rules` is a parse_robots output (host, allow, prefix).  Runs
-    # after the blocklist (blocked pages never pay the robots join) and
-    # before url canonicalization.  Refused counts get their own summary /
-    # metrics counter; in LINEAGE they fold into the admission column
-    # (blocked_dropped audits ALL admission refusals — blocklist + robots —
-    # so each dropped page still lands in exactly one lineage bucket).
-    robots_by_part: dict[int, int] = {}
-    robots_dropped = 0
-    if robots_rules is not None:
-        from ..operators.webgraph import robots_filter
-
-        rb_losers = (
-            robots_filter(dedup_universe.select("url"), robots_rules)
-            .filter(~F.col("allowed"))
-            .select("url")
-            .localCheckpoint()  # eager: the verdict DAG runs exactly once
-        )
-        robots_by_part = _per_part_counts(rb_losers)
-        robots_dropped = sum(robots_by_part.values())
-        todo = todo.join(F.broadcast(rb_losers), "url", "left_anti")
-        dedup_universe = dedup_universe.join(F.broadcast(rb_losers), "url", "left_anti")
-        tm = _mark("robots", tm)
-    admission_by_part = {
-        p: blocked_by_part.get(p, 0) + robots_by_part.get(p, 0)
-        for p in set(blocked_by_part) | set(robots_by_part)
-    }
-
-    # --- tier 0: canonical-URL dedup (no text read at all) ---------------
-    url_drops_by_part: dict[int, int] = {}
-    url_dups_dropped = 0
-    if url_dedup:
-        from pyspark.sql import Window
-
-        from ..operators.curation import canonical_url
-
-        w = Window.partitionBy("_cu")
-        url_losers = (
-            dedup_universe.select("url", canonical_url(F.col("url")).alias("_cu"))
-            .withColumn("_keep", F.min("url").over(w))
-            .filter(F.col("url") != F.col("_keep"))
-            .select("url")
-            .localCheckpoint()  # eager: the canonicalize DAG runs once
-        )
-        url_drops_by_part = _per_part_counts(url_losers)
-        url_dups_dropped = sum(url_drops_by_part.values())
-        todo = todo.join(F.broadcast(url_losers), "url", "left_anti")
-        dedup_universe = dedup_universe.join(F.broadcast(url_losers), "url", "left_anti")
-        tm = _mark("url-dedup", tm)
-
-    dups_by_part: dict[int, int] = {}
-    dups_dropped = 0
-    if dedup is not None:
-        from ..operators.dedup import dedup_losers
-
-        # empty/whitespace texts are excluded from the dedup universe: they
-        # all share one fingerprint but are NOT duplicates of each other —
-        # each must reach the quarantine branch with its own url/provenance.
-        # Losers are computed over the FULL corpus, not this run's todo: on
-        # resume a duplicate pair can span a completed part and a remaining
-        # one, and a todo-only universe would let the remaining copy through
-        # (the winner-by-min-url is also only stable against the full set).
-        dedupable = dedup_universe.filter(F.length(F.trim(F.col("text"))) > 0)
-        losers = dedup_losers(
-            dedupable, method=dedup, text_col="text", id_col="url"
-        ).localCheckpoint()  # eager: the dedup DAG runs exactly once
-        dups_by_part = _per_part_counts(losers)
-        dups_dropped = sum(dups_by_part.values())
-        # Regime note (100 TB): every loser anti-join in this job carries an
-        # EXPLICIT broadcast hint (r6): the checkpointed loser sets are
-        # LogicalRDD scans whose size statistic defaults to Long.Max, so
-        # without the hint the planner NEVER chose broadcast and the corpus
-        # paid a SortMergeJoin shuffle with its html/text payload (measured
-        # 10.4s -> 4.7s on the dedup pipeline's extract+write at sf0.1).
-        # The hint is also the documented regime: losers are |dups|-sized,
-        # not corpus-sized (the common <~1%-dup case).  Past broadcastable
-        # size the right call is NOT SortMergeJoin anyway, i.e. a full
-        # wide shuffle of the PAGES including html payload — at a 10%-dup
-        # 100 TB corpus that shuffle is the job.  The high-dup deployment
-        # keeps the corpus bucketed by url at ingest (Iceberg bucket(url,N)
-        # transform) and writes the losers bucketed identically; then
-        # sources.bucketing.bucketed_anti_join does this step with NO
-        # Exchange on either side (plan-tested in
-        # test_plans.test_bucketed_dedup_anti_join_has_no_exchange).
-        todo = todo.join(F.broadcast(losers), "url", "left_anti")
-        tm = _mark("dedup", tm)
-
-    store_dups_by_part: dict[int, int] = {}
-    store_dups_dropped = 0
+    store = None
     if fp_store_path is not None:
-        from ..operators.dedup import corpus_fingerprints
-
         # explicit existence probe (Hadoop FS — scheme-agnostic): ONLY a
         # missing path means "first crawl".  A store that exists but fails to
         # read (corrupt footer, permission error) must PROPAGATE — silently
@@ -397,49 +301,104 @@ def run_extraction_job(
         # duplicate fingerprints to a store that is still there.
         jpath = spark._jvm.org.apache.hadoop.fs.Path(fp_store_path)
         fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        store = spark.read.parquet(fp_store_path).select("fp") if fs.exists(jpath) else None
-        if store is not None:
-            # cross-run dedup: a page whose fp is already in the store was
-            # processed by a COMPLETED earlier run — drop it before the
-            # Arrow stage.  Same full-corpus/resume discipline as the
-            # in-run loser set above; empty texts bypass (own provenance).
-            # The probe universe excludes every EARLIER tier's losers (url
-            # variants, in-run text dups): a page dropped by two tiers must
-            # be audited exactly once (it was already counted upstream;
-            # counting it here too would overstate the lineage/metrics drop
-            # totals — the anti-joins themselves were always idempotent).
-            store_universe = dedup_universe.filter(
-                F.length(F.trim(F.col("text"))) > 0
+        if fs.exists(jpath):
+            store = spark.read.parquet(fp_store_path).select("fp")
+
+    # --- pre-extract funnel: one keyed frame, one loser table -------------
+    drops: dict[str, dict[int, int]] = {t: {} for t in _DROP_COUNTERS}
+    need_fp = dedup is not None or fp_store_path is not None
+    if need_fp or url_dedup or blocklist is not None or robots_rules is not None:
+        keyed = raw_pages.select("url")
+        if need_fp:
+            from ..operators.dedup import corpus_fingerprints
+
+            nonempty = F.length(F.trim(F.col("text"))) > 0
+            keyed = corpus_fingerprints(
+                raw_pages.select("url", F.when(nonempty, F.col("text")).alias("text")),
+                "text",
+                "url",
             )
-            if dedup is not None:
-                store_universe = store_universe.join(F.broadcast(losers), "url", "left_anti")
-            fps = corpus_fingerprints(store_universe, "text", "url")
-            # Optional Bloom admission tier (fp_store_bloom): at store >>
-            # batch scale the semi-join shuffles the whole new batch on fp
-            # even though almost none of it is in the store.  The bitset
-            # (one word-keyed shuffle of the STORE, output bounded by the
-            # filter size) turns that into a narrow codegen probe; only the
-            # bloom-HIT slice reaches the join.  False negatives are
-            # impossible, the join removes false positives — the loser set,
-            # lineage counts, and survivors are IDENTICAL either way
-            # (test_job_fp_store_bloom_identical).
-            probe_fps = fps
+        # eager: one scan and one hash of the corpus for every tier below
+        # and for the fp-store append
+        keyed = with_part_id(keyed, num_parts).localCheckpoint()
+        frame = keyed.withColumn("_drop", F.lit(None).cast("string"))
+        if blocklist is not None:
+            from ..operators.webgraph import domain_suffixes, host_of
+
+            hits = keyed.select(
+                "url", F.explode(domain_suffixes(host_of(F.col("url")))).alias("_sfx")
+            ).join(
+                F.broadcast(blocklist.select(F.lower("domain").alias("_sfx"))),
+                "_sfx",
+                "left_semi",
+            )
+            frame = _flag(frame, "blocked", hits)
+        if robots_rules is not None:
+            from ..operators.webgraph import robots_filter
+
+            # the verdict is per row, so it runs on the frame itself
+            verdict = robots_filter(frame, robots_rules)
+            frame = _drop_where(verdict, "robots", ~F.col("allowed")).drop("allowed")
+        if url_dedup:
+            from ..operators.curation import canonical_url
+
+            frame = _keep_min(frame, "url_dups", canonical_url(F.col("url")), F.lit(True))
+        if dedup == "exact":
+            # null fps (empty texts) are never members; keying them by url
+            # spreads them instead of piling them into one window partition
+            has_fp = F.col("fp").isNotNull()
+            frame = _keep_min(frame, "dups", F.coalesce("fp", "url"), has_fp)
+        elif dedup is not None:
+            from ..operators.dedup import dedup_losers
+
+            # the one tier that needs the text back, for the pages still in
+            alive = frame.filter(F.col("_drop").isNull() & F.col("fp").isNotNull())
+            texts = raw_pages.select("url", "text").join(alive, "url", "left_semi")
+            frame = _flag(frame, "dups", dedup_losers(texts, dedup, "text", "url"))
+        if store is not None:
+            probe = keyed.filter(F.col("fp").isNotNull())
             if fp_store_bloom:
                 from ..operators.dedup import bloom_build, bloom_hit
 
                 words = bloom_build(store, m_bits=fp_store_bloom_bits, k=4)
-                probe_fps = fps.filter(
+                probe = probe.filter(
                     bloom_hit(F.col("fp"), words, fp_store_bloom_bits, 4)
                 )
-            store_losers = (
-                probe_fps.join(store, "fp", "left_semi")
-                .select("url")
-                .localCheckpoint()
-            )
-            store_dups_by_part = _per_part_counts(store_losers)
-            store_dups_dropped = sum(store_dups_by_part.values())
-            todo = todo.join(F.broadcast(store_losers), "url", "left_anti")
-            tm = _mark("store-dedup", tm)
+            frame = _flag(frame, "store_dups", probe.join(store, "fp", "left_semi"))
+        # eager: the whole funnel DAG runs exactly once
+        losers = (
+            frame.filter(F.col("_drop").isNotNull())
+            .select("url", "part_id", "_drop")
+            .localCheckpoint()
+        )
+        for r in in_run(losers).groupBy("_drop", "part_id").count().collect():
+            drops[r["_drop"]][r["part_id"]] = r["count"]
+        # Regime note (100 TB): the loser anti-join carries an EXPLICIT
+        # broadcast hint (r6): the checkpointed loser table is a LogicalRDD
+        # scan whose size statistic defaults to Long.Max, so without the hint
+        # the planner never chose broadcast and the corpus paid a
+        # SortMergeJoin shuffle with its html/text payload (measured 10.4s ->
+        # 4.7s on the dedup pipeline's extract+write at sf0.1).  Losers are
+        # |dups|-sized, not corpus-sized, in the common <~1%-dup case.  The
+        # high-dup deployment keeps the corpus bucketed by url at ingest and
+        # writes the losers bucketed identically; then
+        # sources.bucketing.bucketed_anti_join does this step with NO
+        # Exchange on either side (plan-tested in
+        # test_plans.test_bucketed_dedup_anti_join_has_no_exchange).
+        todo = todo.join(F.broadcast(losers.select("url")), "url", "left_anti")
+        tm = _mark("funnel", tm)
+    counters = {f"{t}_dropped": sum(by_part.values()) for t, by_part in drops.items()}
+
+    def parts_sum(*tiers: str) -> dict[int, int]:
+        out: dict[int, int] = {}
+        for t in tiers:
+            for p, n in drops[t].items():
+                out[p] = out.get(p, 0) + n
+        return out
+
+    admission_by_part = parts_sum("blocked", "robots")
+    url_drops_by_part = parts_sum("url_dups")
+    drops_by_part = parts_sum("dups", "store_dups")
 
     # part_id is a pure function of url, so it is recomputed after the Arrow
     # stage instead of being dragged through it (narrower Arrow batches).
@@ -500,12 +459,7 @@ def run_extraction_job(
     # parts, intersected with only_parts when restricted.
     # explicit schema: a run whose every page was deduped away writes an
     # EMPTY partitioned dir, where schema inference would throw
-    written = spark.read.schema(extracted.schema).parquet(extractions_path)
-    this_run = written
-    if done:
-        this_run = this_run.filter(~F.col("part_id").isin(list(done)))
-    if only_parts is not None:
-        this_run = this_run.filter(F.col("part_id").isin(only_parts))
+    this_run = in_run(spark.read.schema(extracted.schema).parquet(extractions_path))
     pii_agg = (
         F.sum("pii_redactions") if pii_scrub else F.lit(0).cast("long")
     ).alias("pii_n")
@@ -526,14 +480,10 @@ def run_extraction_job(
     # a partition whose EVERY page was a dedup loser writes zero output rows
     # and so never appears in the written table — it is still COMPLETE, and
     # without a lineage row every resume would re-run it (and re-count its
-    # losers in the metrics) forever.  dups_by_part is already restricted to
-    # this run's parts, so its keys minus the written parts are exactly the
-    # dedup-emptied partitions.
+    # losers in the metrics) forever.  The drop counts are already restricted
+    # to this run's parts, so their keys minus the written parts are exactly
+    # the dedup-emptied partitions.
     seen_parts = {r.part_id for r in stats_rows}
-    drops_by_part = {
-        p: dups_by_part.get(p, 0) + store_dups_by_part.get(p, 0)
-        for p in set(dups_by_part) | set(store_dups_by_part)
-    }
     dedup_only_parts = sorted(
         p
         for p in set(drops_by_part) | set(url_drops_by_part) | set(admission_by_part)
@@ -541,12 +491,7 @@ def run_extraction_job(
     )
     if not stats_rows and not dedup_only_parts:
         return {"run_id": run_id, "docs_in": 0, "segments_out": 0, "errors": 0,
-                "dups_dropped": dups_dropped,
-                "store_dups_dropped": store_dups_dropped,
-                "url_dups_dropped": url_dups_dropped,
-                "blocked_dropped": blocked_dropped,
-                "robots_dropped": robots_dropped,
-                "pii_redactions": 0,
+                **counters, "pii_redactions": 0,
                 "skipped_parts": sorted(done), "elapsed_sec": 0.0}
     stats = spark.createDataFrame(
         [
@@ -573,11 +518,7 @@ def run_extraction_job(
             (run_id, "docs_in", float(docs_in), run_ts),
             (run_id, "segments_out", float(seg_out), run_ts),
             (run_id, "errors", float(err_out), run_ts),
-            (run_id, "dups_dropped", float(dups_dropped), run_ts),
-            (run_id, "store_dups_dropped", float(store_dups_dropped), run_ts),
-            (run_id, "url_dups_dropped", float(url_dups_dropped), run_ts),
-            (run_id, "blocked_dropped", float(blocked_dropped), run_ts),
-            (run_id, "robots_dropped", float(robots_dropped), run_ts),
+            *[(run_id, k, float(n), run_ts) for k, n in counters.items()],
             (run_id, "pii_redactions", float(pii_redactions_total), run_ts),
             (run_id, "elapsed_sec", float(elapsed), run_ts),
             (run_id, "docs_per_sec", float(docs_in) / elapsed if elapsed > 0 else 0.0, run_ts),
@@ -588,19 +529,14 @@ def run_extraction_job(
     tm = _mark("metrics+lineage-write", tm)
 
     if fp_store_path is not None:
-        from ..operators.dedup import corpus_fingerprints
-
         # append the fingerprints of everything THIS run actually processed
         # (written urls = post-dedup survivors; in-run losers share their
         # winner's fp, store losers are already present — neither re-enters)
-        # so the next crawl's store probe sees this run as completed.
-        corpus_fingerprints(
-            pages.filter(F.length(F.trim(F.col("text"))) > 0).join(
-                this_run.select("url").distinct(), "url", "left_semi"
-            ),
-            "text",
-            "url",
-        ).write.mode("append").parquet(fp_store_path)
+        # so the next crawl's store probe sees this run as completed.  The
+        # keyed frame already holds every fp: the pages are not re-read.
+        keyed.filter(F.col("fp").isNotNull()).join(
+            this_run.select("url").distinct(), "url", "left_semi"
+        ).select("url", "fp").write.mode("append").parquet(fp_store_path)
         _mark("fp-store-append", tm)
 
     return {
@@ -608,11 +544,7 @@ def run_extraction_job(
         "docs_in": docs_in,
         "segments_out": seg_out,
         "errors": err_out,
-        "dups_dropped": dups_dropped,
-        "store_dups_dropped": store_dups_dropped,
-        "url_dups_dropped": url_dups_dropped,
-        "blocked_dropped": blocked_dropped,
-        "robots_dropped": robots_dropped,
+        **counters,
         "pii_redactions": pii_redactions_total,
         "skipped_parts": sorted(done),
         "elapsed_sec": elapsed,

@@ -648,3 +648,172 @@ def test_job_fp_store_bloom_identical(spark, pages_parquet, tmp_path):
         )
     assert outs["plain"] == outs["bloom"]
     assert outs["bloom"][0] == 10 and outs["bloom"][1] == 5
+
+
+def _write_pages(tmp_path, rows, name="in") -> str:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_sam_project_spark.sources.io import PAGES_ARROW_SCHEMA
+
+    in_dir = tmp_path / name
+    in_dir.mkdir()
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=PAGES_ARROW_SCHEMA), str(in_dir / "p.parquet")
+    )
+    return str(in_dir)
+
+
+def _page(url: str, text: str) -> dict:
+    from datetime import datetime
+
+    return {"url": url, "warc_ts": datetime(2025, 1, 1, 10, 0), "html": None,
+            "text": text, "lang": "es"}
+
+
+def test_job_tier_precedence_first_fire(spark, tmp_path):
+    """One text shared by three pages: a blocklisted page with the SMALLEST
+    url, a robots-refused page and an admitted page.  Each refused page is
+    audited by its admission tier only, and the exact-dedup winner is picked
+    among the admitted rows: the admitted page is NOT a duplicate of pages
+    that never got in (a keep-min over every row would name the blocked url
+    the winner and drop the admitted page as its copy)."""
+    from ocr_sam_project_spark.operators.webgraph import parse_robots
+
+    text = "texto compartido por tres paginas de hosts distintos en la prueba"
+    blocked_url = "https://a.blocked.example/x"
+    refused_url = "https://r.example.com/private/p"
+    admitted_url = "https://s.example.com/ok"
+    in_dir = _write_pages(
+        tmp_path, [_page(u, text) for u in (blocked_url, refused_url, admitted_url)]
+    )
+    robots = parse_robots(
+        spark.createDataFrame(
+            [("r.example.com", "User-agent: *\nDisallow: /private\n")],
+            "host string, robots_txt string",
+        )
+    )
+    out = str(tmp_path / "out")
+    s = run_extraction_job(
+        spark, in_dir, out, run_id="prec", num_parts=4, dedup="exact",
+        url_dedup=True,
+        blocklist=spark.createDataFrame([("blocked.example",)], "domain string"),
+        robots_rules=robots,
+    )
+    assert s["blocked_dropped"] == 1
+    assert s["robots_dropped"] == 1
+    assert s["url_dups_dropped"] == 0
+    assert s["dups_dropped"] == 0
+    assert s["docs_in"] == 1
+    written = {r.url for r in spark.read.parquet(f"{out}/extractions").select("url").collect()}
+    assert written == {admitted_url}
+    lin = spark.read.parquet(f"{out}/lineage")
+    assert lin.agg(F.sum("blocked_dropped")).first()[0] == 2
+    assert lin.agg(F.sum("dups_dropped")).first()[0] == 0
+
+
+def test_job_minhash_dedup(spark, tmp_path):
+    """dedup="minhash" through the job: a planted three-page near-duplicate
+    cluster keeps its min-url page, the two near copies are dropped before
+    extraction and audited in the summary and in lineage; distinct and
+    empty-text pages are untouched."""
+    words = (
+        "el juzgado primero de circuito civil ordena el embargo de las cuentas "
+        "bancarias del demandado hasta cubrir la suma adeudada mas intereses "
+        "y costas del proceso ejecutivo iniciado por el banco nacional contra "
+        "la sociedad comercial del distrito capital en el ano dos mil veinte"
+    ).split()
+    base = " ".join(words)
+    rows = [
+        _page("https://m.example/1", base),
+        _page("https://m.example/2", " ".join(words[:-1] + ["veintiuno"])),
+        _page("https://m.example/3", " ".join(words[:-1] + ["veintidos"])),
+        _page("https://u.example/1", "solicitud de informacion de clientes del banco "
+              "sobre movimientos de la cuenta corriente durante el ultimo trimestre"),
+        _page("https://u.example/2", "citacion formal para comparecer ante el despacho "
+              "judicial el proximo lunes a primera hora con documentos de identidad"),
+        _page("https://u.example/empty", "   "),
+    ]
+    in_dir = _write_pages(tmp_path, rows)
+    out = str(tmp_path / "out")
+    s = run_extraction_job(spark, in_dir, out, run_id="mh", num_parts=4, dedup="minhash")
+    assert s["dups_dropped"] == 2
+    assert s["docs_in"] == 4
+    written = {r.url for r in spark.read.parquet(f"{out}/extractions").select("url").collect()}
+    assert written == {"https://m.example/1", "https://u.example/1",
+                       "https://u.example/2", "https://u.example/empty"}
+    lin = spark.read.parquet(f"{out}/lineage")
+    assert lin.agg(F.sum("dups_dropped")).first()[0] == 2
+    m = {r.metric: r.value for r in spark.read.parquet(f"{out}/metrics").collect()}
+    assert m["dups_dropped"] == 2.0 and m["docs_in"] == 4.0
+
+
+def test_job_all_tiers_two_eager_checkpoints(spark, tmp_path):
+    """The funnel is one pass: an all-tiers run checkpoints eagerly at most
+    twice (the keyed frame and the loser table), not once per tier."""
+    from ocr_sam_project_spark.operators.webgraph import parse_robots
+
+    store = str(tmp_path / "fp_store")
+    run_extraction_job(
+        spark, _write_pages(tmp_path, [_page("https://s.example.com/old", "texto ya visto")], "c1"),
+        str(tmp_path / "o1"), run_id="c1", num_parts=4, fp_store_path=store,
+    )
+    rows = [
+        _page("https://a.blocked.example/x", "pagina bloqueada"),
+        _page("https://r.example.com/private/p", "pagina rechazada por robots"),
+        _page("https://u.example.com/p", "pagina con variante de url"),
+        _page("https://u.example.com/p?utm_source=x", "pagina con variante de url"),
+        _page("https://t.example.com/1", "texto repetido en dos urls"),
+        _page("https://t.example.com/2", "texto repetido en dos urls"),
+        _page("https://s.example.com/new", "texto ya visto"),
+        _page("https://k.example.com/ok", "pagina admitida unica"),
+    ]
+    in_dir = _write_pages(tmp_path, rows, "c2")
+    robots = parse_robots(
+        spark.createDataFrame(
+            [("r.example.com", "User-agent: *\nDisallow: /private\n")],
+            "host string, robots_txt string",
+        )
+    )
+    blocked = spark.createDataFrame([("blocked.example",)], "domain string")
+
+    cls = type(blocked)  # the concrete (classic) DataFrame class
+    orig = cls.localCheckpoint
+    eager_calls = []
+
+    def counting(self, eager=True, *args, **kwargs):
+        if eager:
+            eager_calls.append(self)
+        return orig(self, eager, *args, **kwargs)
+
+    try:
+        cls.localCheckpoint = counting
+        s = run_extraction_job(
+            spark, in_dir, str(tmp_path / "o2"), run_id="c2", num_parts=4,
+            dedup="exact", fp_store_path=store, url_dedup=True, pii_scrub=True,
+            blocklist=blocked, robots_rules=robots,
+        )
+    finally:
+        cls.localCheckpoint = orig
+    assert (s["blocked_dropped"], s["robots_dropped"], s["url_dups_dropped"],
+            s["dups_dropped"], s["store_dups_dropped"], s["docs_in"]) == (1, 1, 1, 1, 1, 3)
+    assert len(eager_calls) <= 2, len(eager_calls)
+
+
+def test_job_split_parallelism_must_be_int(spark, pages_parquet, tmp_path):
+    """A malformed split_parallelism raises instead of silently keeping
+    Spark's default split size."""
+    with pytest.raises(TypeError):
+        run_extraction_job(
+            spark, pages_parquet, str(tmp_path / "out"), split_parallelism="4"
+        )
+
+
+def test_row_group_probe_warns_on_unreadable_footer(tmp_path):
+    """A local input whose footer cannot be read keeps the scan as it is,
+    and says so."""
+    from ocr_sam_project_spark.pipeline.job import _row_groups_below
+
+    (tmp_path / "bad.parquet").write_bytes(b"not a parquet file")
+    with pytest.warns(RuntimeWarning, match="row-group probe"):
+        assert _row_groups_below(str(tmp_path), 4) is False
